@@ -1,7 +1,9 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem operations for the pipeline's maintenance jobs, routed
@@ -96,39 +98,35 @@ object Fs {
   }
 
   /** Recursive listing of regular files under `path` whose name passes
-    * `keep`; empty when the directory is absent. */
-  def listFiles(spark: SparkSession, path: String, keep: String => Boolean): Seq[(String, Long)] = {
-    val (fs, p) = fsOf(path, conf(spark))
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && keep(st.getPath.getName))
-          buf += ((st.getPath.toString, st.getLen))
-      }
-      buf.toSeq
-    }
-  }
+    * `keep`; empty when the directory is absent. A directory that
+    * vanishes while it is listed (a concurrent swap retiring it) also
+    * reads as absent, never as a failure. The walk uses plain
+    * `listStatus` rather than `FileSystem.listFiles`: the located
+    * statuses that one builds copy each file's permissions, which the
+    * local filesystem looks up by running `ls` once per file — slow, and
+    * a failure when that file was deleted since the directory read. */
+  def listFiles(spark: SparkSession, path: String, keep: String => Boolean): Seq[(String, Long)] =
+    listStatuses(spark, path, keep).map(st => (st.getPath.toString, st.getLen))
 
   /** [[listFiles]] with each file's modification time — the identity
     * triple (path, length, mtime) a snapshot cache needs to detect that
     * a file it read earlier is still the same file (r15: the Delta
     * replay cache). */
   def listFileStats(spark: SparkSession, path: String,
-                    keep: String => Boolean): Seq[(String, Long, Long)] = {
+                    keep: String => Boolean): Seq[(String, Long, Long)] =
+    listStatuses(spark, path, keep)
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+
+  private def listStatuses(spark: SparkSession, path: String,
+                           keep: String => Boolean): Seq[FileStatus] = {
     val (fs, p) = fsOf(path, conf(spark))
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && keep(st.getPath.getName))
-          buf += ((st.getPath.toString, st.getLen, st.getModificationTime))
+    def walk(dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.isFile && keep(st.getPath.getName)) Seq(st)
+        else Nil
       }
-      buf.toSeq
-    }
+    try walk(p)
+    catch { case _: FileNotFoundException => Seq.empty }
   }
 }

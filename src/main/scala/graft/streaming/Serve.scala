@@ -34,8 +34,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    in-process cache — `@st.cache_data` + redeploy, without the
   *    restart. DURING a republish (the window where the old files are
   *    retired and the new generation is not yet committed) the cached
-  *    LAST generation keeps serving — read-your-republish: a client
-  *    never sees a torn result, only the old rows or the new rows.
+  *    LAST generation keeps serving, and so does a request whose
+  *    generation listing or parquet read races the swap (a directory
+  *    that vanishes while it is listed reads as absent, see
+  *    [[Fs.listFiles]]; any other failure falls back to the cache) —
+  *    read-your-republish: once a segment has been served, a client
+  *    never sees a torn result or an error during a republish, only the
+  *    old rows or the new rows. A segment with no cached generation yet
+  *    has nothing to fall back on, so its first read must not race a
+  *    swap.
   *
   * Concurrency: the cache is a [[java.util.concurrent.ConcurrentHashMap]]
   * keyed per segment, so the read-check-update is safe even if the
@@ -136,8 +143,8 @@ final class Serve private (spark: SparkSession, resultsDir: String,
 
   private def segDir(seg: String) = s"$resultsDir/$seg"
 
-  private def ready: Seq[String] =
-    segments.filter(s => Fs.listFiles(spark, segDir(s), _.endsWith(".parquet")).nonEmpty)
+  private def ready(seg: String): Boolean =
+    Fs.listFiles(spark, segDir(seg), _.endsWith(".parquet")).nonEmpty
 
   /** JSON string-escape for request-derived text interpolated into
     * response bodies (quotes/backslashes/control chars), so a segment
@@ -173,26 +180,26 @@ final class Serve private (spark: SparkSession, resultsDir: String,
       .map { case (p, len) => p.hashCode.toLong ^ len }.sum
 
   /** Rows of one segment as a JSON array string, cache keyed by the
-    * result generation; mid-republish (no committed files, or a read
-    * that fails because the old generation just vanished) serves the
-    * cached last generation rather than a torn read. */
+    * result generation; mid-republish (no committed files, or a listing
+    * or read that fails because the old generation just vanished)
+    * serves the cached last generation rather than a torn read. */
   private def rowsJson(seg: String, limit: Int): String = {
-    val gen = generation(seg)
     val cached = Option(cache.get(seg))
-    cached match {
-      case Some((g, json)) if g == gen && limit == 50 => json
-      case _ =>
-        try {
+    try {
+      val gen = generation(seg)
+      cached match {
+        case Some((g, json)) if g == gen && limit == 50 => json
+        case _ =>
           val df: DataFrame = spark.read.parquet(segDir(seg)).limit(limit)
           val json = df.toJSON.collect().mkString("[", ",", "]")
           if (limit == 50) cache.put(seg, (gen, json))
           json
-        } catch {
-          case NonFatal(e) =>
-            cached match {
-              case Some((_, json)) => json // stale-while-republish
-              case None => throw e
-            }
+      }
+    } catch {
+      case NonFatal(e) =>
+        cached match {
+          case Some((_, json)) => json // stale-while-republish
+          case None => throw e
         }
     }
   }
@@ -272,12 +279,12 @@ final class Serve private (spark: SparkSession, resultsDir: String,
       else respond(x, 404, """{"error":"not found"}""")
     })
     server.createContext("/health", (x: HttpExchange) => {
-      val r = ready
-      if (r.size == segments.size)
+      val r = segments.count(ready)
+      if (r == segments.size)
         respond(x, 200, s"""{"status":"ok","segments":${segments.size}}""")
       else
         respond(x, 503,
-          s"""{"status":"waiting","ready":${r.size},"expected":${segments.size}}""")
+          s"""{"status":"waiting","ready":$r,"expected":${segments.size}}""")
     })
     server.createContext("/segments", (x: HttpExchange) =>
       respond(x, 200, segments.map(s => s""""${esc(s)}"""").mkString("[", ",", "]")))
@@ -292,7 +299,7 @@ final class Serve private (spark: SparkSession, resultsDir: String,
         }).flatMap(_.toIntOption).filter(_ > 0).getOrElse(50)
       if (!segments.contains(path))
         respond(x, 404, s"""{"error":"unknown segment","segment":"${esc(path)}"}""")
-      else if (!ready.contains(path) && !cache.containsKey(path))
+      else if (!cache.containsKey(path) && !ready(path))
         respond(x, 503, s"""{"status":"waiting","segment":"${esc(path)}"}""")
       else
         try respond(x, 200, rowsJson(path, limit))

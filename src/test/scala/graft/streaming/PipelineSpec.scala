@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -134,6 +136,150 @@ class PipelineSpec extends SparkSpec {
     // the ingested fact tables hold the full fixture after both cycles
     assert(spark.read.parquet(s"$root/tables/orders").count() ==
       graft.sources.Tables.orders(spark, sf).count())
+  }
+
+  private val segments = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+
+  private def httpGet(port: Int, path: String): (Int, String) = {
+    val r = java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), r.body())
+  }
+
+  /** The reduce `publishResults` replaced, kept as the reference it must
+    * equal: one plan per segment, `orderBy(revenue desc, l_orderkey)`
+    * then `limit(50)`, over the same ingested tables. */
+  private def perSegmentTop50(root: String, seg: String): Seq[org.apache.spark.sql.Row] = {
+    val tables = s"$root/tables"
+    val li = spark.read.parquet(s"$tables/lineitem")
+    val ord = spark.read.parquet(s"$tables/orders")
+    val cust = spark.read.parquet(s"$tables/customer")
+    val cutoff = lit(Synthesize.OrdTgtHi).cast("timestamp")
+    ord.filter(col("o_order_time") < cutoff)
+      .join(cust.filter(col("c_mktsegment") === seg), col("o_custkey") === col("c_custkey"))
+      .join(li.filter(col("l_ship_time") > cutoff), col("o_orderkey") === col("l_orderkey"))
+      .groupBy("l_orderkey", "o_order_time")
+      .agg(graft.functions.Exact.exactSum(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
+      .orderBy(col("revenue").desc, col("l_orderkey"))
+      .limit(50)
+      .collect().toSeq
+  }
+
+  /** A segment's served result: its rows in file order, after checking
+    * the served layout (one data file, the served columns in order). */
+  private def served(root: String, seg: String): Seq[org.apache.spark.sql.Row] = {
+    val dir = s"$root/results/$seg"
+    assert(Fs.listFiles(spark, dir, _.endsWith(".parquet")).size == 1,
+      s"$seg must be served from exactly one data file")
+    val res = spark.read.parquet(dir)
+    assert(res.columns.toSeq == Seq("l_orderkey", "o_order_time", "revenue"), res.columns.toSeq)
+    res.collect().toSeq
+  }
+
+  /** A finished one-cycle pipeline that later specs only republish. */
+  private lazy val finishedRoot: String = {
+    val root = s"$base/publish-finished"
+    wipe(root)
+    PipelineMain.runPipeline(spark, sf, root, nCycles = 1, compactEvery = 1)
+    root
+  }
+
+  test("publish: one plan serves every segment's top-50 equal to the per-segment plan, mid-run and after finish") {
+    val root = s"$base/publish-equiv"
+    wipe(root)
+    def assertEquivalent(when: String): Unit = segments.foreach { seg =>
+      val want = perSegmentTop50(root, seg)
+      assert(want.nonEmpty, s"$when: $seg has no qualifying rows, the comparison is vacuous")
+      assert(served(root, seg) == want, s"$when: $seg differs from the per-segment plan")
+    }
+    PipelineMain.runCycles(spark, sf, root, batchIds = Seq(0), nBatches = 2,
+      compactEvery = Int.MaxValue)
+    PipelineMain.publishResults(spark, root)
+    assertEquivalent("after the mid-run publish")
+    PipelineMain.runCycles(spark, sf, root, batchIds = Seq(1), nBatches = 2,
+      compactEvery = Int.MaxValue)
+    PipelineMain.finishAndServe(spark, sf, root)
+    assertEquivalent("after finishAndServe")
+  }
+
+  test("publish: a segment with no qualifying rows serves an empty result; the others are unchanged") {
+    val root = s"$base/publish-empty"
+    wipe(root)
+    PipelineMain.runPipeline(spark, sf, root, nCycles = 1, compactEvery = 1)
+    val others = segments.filterNot(_ == "BUILDING")
+    val before = others.map(s => s -> served(root, s)).toMap
+    val cust = s"$root/tables/customer"
+    spark.read.parquet(cust).filter(col("c_mktsegment") =!= "BUILDING")
+      .write.parquet(s"$root/customer-filtered")
+    wipe(cust)
+    Fs.renameOrFail(spark, s"$root/customer-filtered", cust)
+    PipelineMain.publishResults(spark, root)
+    assert(served(root, "BUILDING").isEmpty)
+    others.foreach(s => assert(served(root, s) == before(s), s"$s changed"))
+    val srv = Serve.start(spark, s"$root/results", segments)
+    try {
+      assert(httpGet(srv.port, "/health")._1 == 200)
+      assert(httpGet(srv.port, "/results/BUILDING") == ((200, "[]")))
+    } finally srv.stop()
+  }
+
+  test("publish: one publishResults call runs a bounded number of Spark jobs") {
+    // measured 8 on the sf0.001 fixture; the per-segment loop it
+    // replaced ran 38 (five plans, five writes, five count jobs)
+    val maxJobs = 8
+    val root = finishedRoot
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.testbridge.ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      PipelineMain.publishResults(spark, root)
+      org.apache.spark.testbridge.ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= maxJobs,
+      s"publishResults ran ${jobs.get} jobs, bound $maxJobs")
+  }
+
+  test("serve: a reader polling through repeated republishes gets 200 for every segment read") {
+    val root = finishedRoot
+    val srv = Serve.start(spark, s"$root/results", segments)
+    try {
+      // every segment is served once first: a segment with no cached
+      // generation has nothing to fall back on during a swap
+      segments.foreach(s => assert(httpGet(srv.port, s"/results/$s")._1 == 200))
+      // /health lists every segment, so it meets a swap most often; it
+      // may say 503 while a segment is swapped out, but must answer
+      val paths = segments.map(s => s"/results/$s") :+ "/health"
+      val answers = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, String)]()
+      @volatile var running = true
+      val reader = new Thread(() => {
+        var i = 0
+        while (running) {
+          val path = paths(i % paths.size)
+          val (code, body) =
+            try httpGet(srv.port, path)
+            catch { case e: java.io.IOException => (-1, e.toString) }
+          answers.add((path, code, body.take(200)))
+          i += 1
+        }
+      })
+      reader.start()
+      try (1 to 5).foreach(_ => PipelineMain.publishResults(spark, root))
+      finally { running = false; reader.join(60000) }
+      val bad = answers.asScala.toSeq.filterNot {
+        case ("/health", c, _) => c == 200 || c == 503
+        case (_, c, _) => c == 200
+      }
+      assert(answers.size >= paths.size, s"only ${answers.size} requests were sent")
+      assert(bad.isEmpty, s"${bad.size} of ${answers.size} requests failed: ${bad.take(3)}")
+    } finally srv.stop()
   }
 
   test("serve: health flips 503->200 when all segments land; results serve as JSON; republish is picked up without restart") {
